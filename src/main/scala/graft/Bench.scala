@@ -173,11 +173,12 @@ object Bench {
     *     shortened to their unique qNN prefix; r21 carried the jobs
     *     map inside this line, which pushed it past the tail budget
     *     and cost it its head ("metric" and part of jobs were cut at
-    *     134 slots).  Now seconds-ONLY, with ADAPTIVE precision: ms
-    *     (3 decimals) while the projected line fits the budget,
-    *     10 ms (2 decimals) beyond — a complete coarser map beats a
-    *     decapitated precise one (r21 verdict #2; BenchTailBudgetSpec
-    *     pins the 150-slot fit);
+    *     134 slots).  Now seconds-ONLY, with ADAPTIVE precision: the
+    *     finest of 3, 2, 1 and 0 decimals whose line fits the budget —
+    *     a complete coarser map beats a decapitated precise one (r21
+    *     verdict #2; BenchTailBudgetSpec pins the 150-slot fit).  A map
+    *     that overflows even at whole seconds throws instead of
+    *     printing a line the tail would cut;
     *  1. per-query jobs for slow rows (sec >= 1) on their OWN line,
     *     printed FIRST so a tail cut truncates jobs, never seconds —
     *     sequential-job count is what separates a shared-machine burst
@@ -198,7 +199,8 @@ object Bench {
     def compactAt(decimals: Int): String = {
       val scale = math.pow(10, decimals)
       val entries = rows.map { case (k, sec, _) =>
-        "\"" + key(k) + "\":" + (math.rint(sec * scale) / scale)
+        val v = math.rint(sec * scale) / scale
+        "\"" + key(k) + "\":" + (if (decimals == 0) v.toLong.toString else v.toString)
       }.mkString("{", ",", "}")
       s"""{"metric":"per_query","unit":"sec","queries":$entries}"""
     }
@@ -209,7 +211,10 @@ object Bench {
     // prefixes (+8 B each incl. newline) — the compact line must fit
     // WHOLE in what remains
     val budget = 2048 - (totalLine.length + 8) - 90 - 8
-    val ms = compactAt(3)
-    Seq(jobsLine, if (ms.length <= budget) ms else compactAt(2), totalLine)
+    val compact = (3 to 0 by -1).iterator.map(compactAt).find(_.length <= budget)
+      .getOrElse(throw new IllegalStateException(
+        s"per-query seconds map for ${rows.size} slots overflows the $budget B tail budget " +
+          "even at whole seconds"))
+    Seq(jobsLine, compact, totalLine)
   }
 }

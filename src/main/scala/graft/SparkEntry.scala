@@ -1467,8 +1467,8 @@ object SparkEntry {
       operators.HeavyHitters.topK(d, key, k = 10, capacity = 64)
     }),
 
-    // Per-GROUP heavy hitters (mergeable SpaceSaving as a typed
-    // Aggregator under groupBy — summaries move, the key stream never
+    // Per-GROUP heavy hitters (mergeable SpaceSaving as the native
+    // sketch aggregate under groupBy — summaries move, the key stream never
     // shuffles raw).  Exact regime: capacity 64 >= distinct keys per
     // source, so intervals collapse and the oracle is the grouped
     // count + per-group window top-k with the same (upper desc, item)
@@ -1491,7 +1491,7 @@ object SparkEntry {
     }),
 
     // Per-group memory-bounded quantiles (same mergeable summary behind
-    // the typed Aggregator surface — the exchange moves one bounded
+    // the native sketch aggregate — the exchange moves one bounded
     // summary per (group, mapper), never the values)
     "q106_group_quantile" -> ((s, dir) => {
       val d = t(s, dir, "documents").df
@@ -1620,10 +1620,11 @@ object SparkEntry {
         Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
       }
       rm(new java.io.File(base))
-      sources.ManifestStore.commitAppend(s, base,
-        d.filter(col("doc_id") % 2 === 0).repartition(8), "even")
-      sources.ManifestStore.commitAppend(s, base,
-        d.filter(col("doc_id") % 2 === 1).repartition(8), "odd")
+      // the two appends are doc-disjoint: stage concurrently, publish
+      // even then odd — the same two versions commitAppend would write
+      sources.ManifestStore.appendConcurrently(s, base, Seq(
+        "even" -> d.filter(col("doc_id") % 2 === 0).repartition(8),
+        "odd" -> d.filter(col("doc_id") % 2 === 1).repartition(8)))
       sources.ManifestStore.compact(s, base, 1L << 20)
       sources.ManifestStore.read(s, base)
         .groupBy((col("doc_id") % 10).as("bucket"))
@@ -1697,30 +1698,17 @@ object SparkEntry {
       val root = s"$evBase/store_" +
         java.util.UUID.randomUUID().toString.take(8)
       // the three ingests are independent (doc-disjoint batches into
-      // one root): STAGE them concurrently — guide §2.6, each batch's
-      // evidence-aggregation job back-fills cores the previous one's
-      // stragglers free — then PUBLISH serially (manifest renames,
-      // milliseconds).  Wall ≈ max of the three scans, not their sum;
-      // same three write jobs, same committed rows (the batch tag is
-      // an explicit literal, so commit order is invisible to the
-      // merge).  Job descriptions/groups are thread-local, so each
-      // staged write labels itself correctly.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      try {
-        val staged = (0 until 3).map { b =>
-          pool.submit(new java.util.concurrent.Callable[sources.ManifestStore.Staged] {
-            def call(): sources.ManifestStore.Staged =
-              sources.ManifestStore.stageAppend(s,
-                root,
-                operators.Dedup.spanEvidenceBatch(
-                    d.filter(pmod(col("doc_id"), lit(3)) === b),
-                    col("text"), col("doc_id"), width = 60)
-                  .withColumn("batch", lit(b)),
-                label = s"batch$b")
-          })
-        }
-        staged.foreach(fut => sources.ManifestStore.commitStaged(s, root, fut.get()))
-      } finally pool.shutdown()
+      // one root): STAGE them concurrently, then PUBLISH serially
+      // (ManifestStore.appendConcurrently).  Wall ≈ max of the three
+      // scans, not their sum; same three write jobs, same committed
+      // rows (the batch tag is an explicit literal, so commit order is
+      // invisible to the merge).
+      sources.ManifestStore.appendConcurrently(s, root, (0 until 3).map { b =>
+        s"batch$b" -> operators.Dedup.spanEvidenceBatch(
+            d.filter(pmod(col("doc_id"), lit(3)) === b),
+            col("text"), col("doc_id"), width = 60)
+          .withColumn("batch", lit(b))
+      })
       operators.Dedup.mergeSpanEvidence(
         sources.ManifestStore.read(s, root), minDocs = 2)
     }),
@@ -1728,7 +1716,7 @@ object SparkEntry {
     // §2.9 streaming sketch twin, DRIVER-GATED (round-14 verdict #6):
     // a GENUINE readStream micro-batch — file source over the events
     // parquet → watermarked 15-min tumbling window → the SAME HLL
-    // Aggregator the batch surface uses (DistinctSketch
+    // aggregate the batch surface uses (DistinctSketch
     // .countDistinctSketch) → memory sink in complete mode.  One
     // deterministic batch; every window stays in the sparse-exact
     // regime (distinct users per window << sparseCap), so the result
@@ -1775,7 +1763,8 @@ object SparkEntry {
         .agg(operators.HeavyHitters.ssSketch(key, capacity = 64).as("sketch"))
       val sketchDir = s"${scratchDir("q120_sketches")}/by_source"
       perSource.write.mode("overwrite").parquet(sketchDir)
-      s.read.parquet(sketchDir)
+      // read back with the schema just written: no footer-inference job
+      s.read.schema(perSource.schema).parquet(sketchDir)
         .agg(operators.HeavyHitters.ssMerge(col("sketch"), capacity = 64).as("total"))
         .select(explode(operators.HeavyHitters.ssTopK(col("total"), 10)).as("h"))
         .select(col("h.item"), col("h.n_lower"), col("h.n_upper"))
@@ -1795,11 +1784,12 @@ object SparkEntry {
           pmod(col("n_chars"), lit(512)).cast(DoubleType)).as("sketch"))
       val sketchDir = s"${scratchDir("q119_sketches")}/by_source"
       daily.write.mode("overwrite").parquet(sketchDir)
-      // ONE merge pass feeds all three probabilities (a per-p unionAll
+      // read back with the schema just written (no footer-inference
+      // job); ONE merge pass feeds all three probabilities (a per-p unionAll
       // would re-run the stored-table aggregate — the expensive phase-2
       // step at scale — once per branch), then stack to rows
       val ps = Seq(0.16, 0.5, 0.84)
-      val merged = s.read.parquet(sketchDir)
+      val merged = s.read.schema(daily.schema).parquet(sketchDir)
         .agg(operators.QuantileSketch.gkMerge(col("sketch")).as("total"))
         .select(ps.zipWithIndex.map { case (p, i) =>
           operators.QuantileSketch.gkQuantile(col("total"), p).as(s"q$i")
@@ -1826,7 +1816,8 @@ object SparkEntry {
         .agg(operators.DistinctSketch.hllSketch(col("user_id")).as("sketch"))
       val sketchDir = s"${scratchDir("q118_sketches")}/daily"
       daily.write.mode("overwrite").parquet(sketchDir)
-      s.read.parquet(sketchDir)
+      // read back with the schema just written: no footer-inference job
+      s.read.schema(daily.schema).parquet(sketchDir)
         .agg(operators.DistinctSketch.hllMerge(col("sketch")).as("total"))
         .select(operators.DistinctSketch.hllEstimate(col("total")).as("e"))
         .select(col("e.n_distinct").as("n_distinct"), col("e.exact").as("exact"))

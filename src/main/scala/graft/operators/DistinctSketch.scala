@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import graft.functions.{SketchAggregate, SketchCodec}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import scala.collection.mutable
 
 /** Memory-bounded distinct counting — a sparse-exact-then-dense HLL
@@ -19,9 +21,10 @@ import scala.collection.mutable
   * keeps the RAW VALUES while a group's cardinality is small (exact
   * answer, `exact = true`), promotes to 2^p max-rank registers when it
   * grows (bounded state, ~1.04/√2^p relative error, `exact = false`),
-  * merges losslessly in both regimes, and rides Spark's typed
-  * `Aggregator` surface so partial merges happen map-side and the
-  * shuffle carries one sketch per (group, mapper) — never the keys.
+  * merges losslessly in both regimes, and runs as a native Catalyst
+  * aggregate ([[graft.functions.SketchAggregate]]) so partial merges
+  * happen map-side and the shuffle carries one sketch per (group,
+  * mapper) — never the keys.
   *
   * Exact regime (how the oracle gates the machinery): while every
   * partial AND the merged union stay ≤ sparseCap distinct values, the
@@ -120,33 +123,33 @@ object DistinctSketch {
 
   final case class DistinctEst(n_distinct: Long, exact: Boolean)
 
-  /** Shared raw-key aggregation core (zero/reduce/merge/buffer are
-    * identical across output shapes — one definition so a null/NaN or
-    * encoder fix can never drift between them).  Spark plans these as
-    * ObjectHashAggregate with map-side partial merge, so the exchange
-    * moves sketches, not keys.  Nulls are skipped like SQL
-    * `count(DISTINCT ...)`. */
-  sealed abstract class HllAggBase[OUT](p: Int, sparseCap: Int)
-      extends Aggregator[String, Hll, OUT] {
-    final def zero: Hll = new Hll(p, sparseCap)
-    final def reduce(b: Hll, a: String): Hll = if (a == null) b else b.add(a)
-    final def merge(b1: Hll, b2: Hll): Hll = b1.merge(b2)
-    final def bufferEncoder: Encoder[Hll] = Encoders.kryo[Hll]
-  }
-
-  /** Typed aggregator: raw keys → (n_distinct, exact). */
-  final class Agg(p: Int, sparseCap: Int) extends HllAggBase[DistinctEst](p, sparseCap) {
-    def finish(r: Hll): DistinctEst = {
-      val (n, exact) = r.result
-      DistinctEst(n, exact)
-    }
-    def outputEncoder: Encoder[DistinctEst] = Encoders.product[DistinctEst]
+  /** The family's [[graft.functions.SketchCodec]]: raw keys arrive as
+    * strings, the result is the (n_distinct, exact) struct, and the
+    * buffer travels as the wire format below.  Spark plans the
+    * aggregate as ObjectHashAggregate with map-side partial merge, so
+    * the exchange moves sketches, not keys.  All merged sketches must
+    * share `p` (the register spaces are incompatible otherwise —
+    * Hll.merge enforces it). */
+  final case class HllCodec(p: Int, sparseCap: Int) extends SketchCodec[Hll] {
+    zero() // Hll checks p and sparseCap: fail when the column is built, not in a task
+    def name: String = "hll"
+    def rawType: DataType = StringType
+    def resultType: DataType = StructType(Seq(
+      StructField("n_distinct", LongType, nullable = false),
+      StructField("exact", BooleanType, nullable = false)))
+    def zero(): Hll = new Hll(p, sparseCap)
+    def add(b: Hll, v: Any): Hll = b.add(v.toString)
+    def merge(b: Hll, o: Hll): Hll = b.merge(o)
+    def result(b: Hll): Any = { val (n, exact) = b.result; InternalRow(n, exact) }
+    def serialize(b: Hll): Array[Byte] = DistinctSketch.serialize(b)
+    def deserialize(bytes: Array[Byte]): Hll = DistinctSketch.deserialize(bytes)
   }
 
   /** Column surface: `countDistinctSketch(keyCol)` usable in any
-    * groupBy — yields a struct (n_distinct, exact). */
+    * groupBy — yields a struct (n_distinct, exact).  Nulls are skipped
+    * like SQL `count(DISTINCT ...)`. */
   def countDistinctSketch(key: Column, p: Int = 12, sparseCap: Int = 4096): Column =
-    udaf(new Agg(p, sparseCap)).apply(key.cast("string"))
+    SketchAggregate.column(key.cast("string"), HllCodec(p, sparseCap))
 
   // ---------------------------------------------------------------
   // Persistable sketch columns — the INCREMENTAL accounting surface.
@@ -234,39 +237,16 @@ object DistinctSketch {
       throw new IllegalArgumentException(s"corrupt sketch: truncated bytes (${e.getMessage})")
   }
 
-  /** Aggregator: raw keys → serialized sketch bytes (shares the
-    * [[HllAggBase]] core). */
-  final class SketchAgg(p: Int, sparseCap: Int) extends HllAggBase[Array[Byte]](p, sparseCap) {
-    def finish(r: Hll): Array[Byte] = serialize(r)
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Aggregator: stored sketch bytes → merged sketch bytes.  All
-    * input sketches must share this instance's precision `p` (the
-    * register spaces are incompatible otherwise — Hll.merge enforces
-    * it); null rows are skipped. */
-  final class MergeAgg(p: Int, sparseCap: Int)
-      extends Aggregator[Array[Byte], Hll, Array[Byte]] {
-    def zero: Hll = new Hll(p, sparseCap)
-    def reduce(b: Hll, a: Array[Byte]): Hll =
-      if (a == null) b else b.merge(deserialize(a))
-    def merge(b1: Hll, b2: Hll): Hll = b1.merge(b2)
-    def finish(r: Hll): Array[Byte] = serialize(r)
-    def bufferEncoder: Encoder[Hll] = Encoders.kryo[Hll]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
   /** `hllSketch(keyCol)` in any groupBy — a BinaryType column holding
     * the group's sketch, ready to persist. */
   def hllSketch(key: Column, p: Int = 12, sparseCap: Int = 4096): Column =
-    udaf(new SketchAgg(p, sparseCap)).apply(key.cast("string"))
+    SketchAggregate.column(key.cast("string"), HllCodec(p, sparseCap), emitBytes = true)
 
   /** `hllMerge(sketchCol)` in any groupBy — merges STORED sketches
-    * (e.g. daily partitions) into one, without touching raw data. */
+    * (e.g. daily partitions) into one, without touching raw data.  All
+    * stored sketches must share precision `p`; null rows are skipped. */
   def hllMerge(sketch: Column, p: Int = 12, sparseCap: Int = 4096): Column =
-    udaf(new MergeAgg(p, sparseCap),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Byte]]())
-      .apply(sketch)
+    SketchAggregate.column(sketch, HllCodec(p, sparseCap), stored = true, emitBytes = true)
 
   /** Scalar: sketch bytes → struct (n_distinct, exact). */
   def hllEstimate(sketch: Column): Column = {

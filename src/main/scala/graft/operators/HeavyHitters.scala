@@ -1,8 +1,12 @@
 package graft.operators
 
+import graft.functions.{SketchAggregate, SketchCodec}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 
 /** Memory-bounded heavy hitters — SpaceSaving (Metwally, Agrawal,
@@ -311,31 +315,8 @@ object HeavyHitters {
       throw new IllegalArgumentException(s"corrupt sketch: truncated bytes (${e.getMessage})")
   }
 
-  /** Typed SpaceSaving Aggregator — the per-GROUP surface ([[topK]] is
-    * global).  One summary per (group, task) under ObjectHashAggregate:
-    * the exchange moves summaries, never the key stream, exactly the
-    * shape of [[QuantileSketch.groupQuantile]] and
-    * [[DistinctSketch.countDistinctSketch]]. */
-  /** Shared raw-key aggregation core (one definition of
-    * zero/reduce/merge/buffer across output shapes — the same
-    * anti-drift pattern as HllAggBase / SummaryAggBase).  Nulls are
-    * ignored, like [[topK]]. */
-  sealed abstract class SsAggBase[OUT](capacity: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[String, SpaceSaving, OUT] {
-    require(capacity >= 1 && capacity <= (1 << 16),
-      s"capacity in [1, 65536] keeps summaries task-bounded, got $capacity")
-    final def zero: SpaceSaving = new SpaceSaving(capacity)
-    final def reduce(b: SpaceSaving, a: String): SpaceSaving = {
-      if (a != null) b.offer(a)
-      b
-    }
-    final def merge(b1: SpaceSaving, b2: SpaceSaving): SpaceSaving = b1.merge(b2)
-    final def bufferEncoder: org.apache.spark.sql.Encoder[SpaceSaving] =
-      org.apache.spark.sql.Encoders.kryo[SpaceSaving]
-  }
-
   /** ONE definition of the ranking chain (upper desc, item asc) shared
-    * by the aggregator finish and the ssTopK scalar, so tie-break or
+    * by [[SsCodec]]'s result and the ssTopK scalar, so tie-break or
     * bound-formula fixes can never drift between them. */
   private def topHits(ss: SpaceSaving, k: Int): Seq[HeavyHit] =
     ss.entries.toSeq
@@ -343,52 +324,47 @@ object HeavyHitters {
       .sortBy(h => (-h.n_upper, h.item))
       .take(k)
 
-  final class TopKAgg(k: Int, capacity: Int) extends SsAggBase[Seq[HeavyHit]](capacity) {
+  /** The family's [[graft.functions.SketchCodec]] — the per-GROUP
+    * surface ([[topK]] is global).  One summary per (group, task) under
+    * ObjectHashAggregate: the exchange moves summaries, never the key
+    * stream.  Raw keys arrive as strings (nulls ignored, like
+    * [[topK]]), the result is the top-`k` [[HeavyHit]] array, and the
+    * buffer travels as the wire format above — deserialized summaries
+    * are only ever merged into (the item-sorted rebuild changes no
+    * merge result).  `k` shapes only the result; the sketch-bytes
+    * surface leaves it at 1.  Stored capacities may differ; a merge
+    * truncates to THIS capacity. */
+  final case class SsCodec(capacity: Int, k: Int = 1) extends SketchCodec[SpaceSaving] {
+    require(capacity >= 1 && capacity <= (1 << 16),
+      s"capacity in [1, 65536] keeps summaries task-bounded, got $capacity")
     require(k >= 1 && capacity >= k, s"need capacity >= k >= 1, got k=$k capacity=$capacity")
-    def finish(r: SpaceSaving): Seq[HeavyHit] = topHits(r, k)
-    def outputEncoder: org.apache.spark.sql.Encoder[Seq[HeavyHit]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[HeavyHit]]()
-  }
-
-  /** Aggregator: raw keys → serialized summary bytes (shares the
-    * [[SsAggBase]] core). */
-  final class SketchBytesAgg(capacity: Int) extends SsAggBase[Array[Byte]](capacity) {
-    def finish(r: SpaceSaving): Array[Byte] = serialize(r)
-    def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
-  }
-
-  /** Aggregator: stored summary bytes → merged summary bytes (the
-    * PODS'12 algebra of [[SpaceSaving.merge]]); null rows skipped. */
-  final class MergeBytesAgg(capacity: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[Array[Byte], SpaceSaving, Array[Byte]] {
-    require(capacity >= 1 && capacity <= (1 << 16), s"capacity in [1, 65536], got $capacity")
-    def zero: SpaceSaving = new SpaceSaving(capacity)
-    def reduce(b: SpaceSaving, a: Array[Byte]): SpaceSaving =
-      if (a == null) b else b.merge(deserialize(a))
-    def merge(b1: SpaceSaving, b2: SpaceSaving): SpaceSaving = b1.merge(b2)
-    def finish(r: SpaceSaving): Array[Byte] = serialize(r)
-    def bufferEncoder: org.apache.spark.sql.Encoder[SpaceSaving] =
-      org.apache.spark.sql.Encoders.kryo[SpaceSaving]
-    def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
+    def name: String = "ss"
+    def rawType: DataType = StringType
+    def resultType: DataType = ArrayType(StructType(Seq(
+      StructField("item", StringType, nullable = true),
+      StructField("n_lower", LongType, nullable = false),
+      StructField("n_upper", LongType, nullable = false))), containsNull = true)
+    def zero(): SpaceSaving = new SpaceSaving(capacity)
+    def add(b: SpaceSaving, v: Any): SpaceSaving = { b.offer(v.toString); b }
+    def merge(b: SpaceSaving, o: SpaceSaving): SpaceSaving = b.merge(o)
+    def result(b: SpaceSaving): Any = new GenericArrayData(topHits(b, k).map(h =>
+      InternalRow(UTF8String.fromString(h.item), h.n_lower, h.n_upper)).toArray[Any])
+    def serialize(b: SpaceSaving): Array[Byte] = HeavyHitters.serialize(b)
+    def deserialize(bytes: Array[Byte]): SpaceSaving = HeavyHitters.deserialize(bytes)
   }
 
   /** `ssSketch(keyCol)` in any groupBy — a BinaryType column holding
     * the group's summary, ready to persist. */
   def ssSketch(key: Column, capacity: Int = 4096): Column =
-    udaf(new SketchBytesAgg(capacity),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[String]())
-      .apply(key.cast(StringType))
+    SketchAggregate.column(key.cast(StringType), SsCodec(capacity), emitBytes = true)
 
   /** `ssMerge(sketchCol)` in any groupBy — merges STORED summaries
-    * without touching raw keys.  Stored capacities may differ; the
-    * result truncates to THIS call's capacity (same contract as the
-    * GK twin). */
+    * (the PODS'12 algebra of [[SpaceSaving.merge]]) without touching
+    * raw keys; null rows are skipped.  Stored capacities may differ;
+    * the result truncates to THIS call's capacity (same contract as
+    * the GK twin). */
   def ssMerge(sketch: Column, capacity: Int = 4096): Column =
-    udaf(new MergeBytesAgg(capacity),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Byte]]())
-      .apply(sketch)
+    SketchAggregate.column(sketch, SsCodec(capacity), stored = true, emitBytes = true)
 
   /** Scalar: sketch bytes → top-k array of (item, n_lower, n_upper)
     * structs (upper desc, item asc); null for a null sketch. */
@@ -405,9 +381,8 @@ object HeavyHitters {
     * item).  Null keys are ignored, like [[topK]]. */
   def groupTopK(df: DataFrame, groupCols: Seq[Column], key: Column,
                 k: Int, capacity: Int): DataFrame = {
-    val agg = udaf(new TopKAgg(k, capacity),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[String]())
-    val out = df.groupBy(groupCols: _*).agg(agg(key.cast(StringType)).as("_hits"))
+    val hits = SketchAggregate.column(key.cast(StringType), SsCodec(capacity, k))
+    val out = df.groupBy(groupCols: _*).agg(hits.as("_hits"))
     // group columns may not collide with the scratch/output names —
     // same loud-failure pattern as Scale.bucketedLag/bucketedSessions
     val reserved = Seq("_hits", "_h", "item", "n_lower", "n_upper")

@@ -1,8 +1,10 @@
 package graft.operators
 
+import graft.functions.{SketchAggregate, SketchCodec}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types._
 import scala.collection.mutable
 
 /** Memory-bounded quantiles — a mergeable rank summary in the style of
@@ -208,49 +210,45 @@ object QuantileSketch {
     * probability, with rank bounds and the exactness witness. */
   final case class GroupQuantile(value: Double, rank_lo: Long, rank_hi: Long, exact: Boolean)
 
-  /** Typed aggregator surface — per-group summaries with map-side
-    * partial merge (ObjectHashAggregate): the exchange moves one
-    * bounded summary per (group, mapper), never the values.  Null
-    * inputs are skipped like SQL aggregates. */
-  /** Shared raw-value aggregation core (zero/reduce/merge/buffer and
-    * the construction-time capacity guard are identical across output
-    * shapes — one definition so a NaN or encoder fix can never drift
-    * between them). */
-  sealed abstract class SummaryAggBase[OUT](capacity: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[Option[Double], Summary, OUT] {
+  /** The family's [[graft.functions.SketchCodec]]: raw values arrive
+    * as doubles (NaN skipped like the exact path), the result is the
+    * [[GroupQuantile]] struct at probability `p`, and the buffer
+    * travels as the wire format below.  Planned as ObjectHashAggregate
+    * with map-side partial merge: the exchange moves one bounded
+    * summary per (group, mapper), never the values.  `p` shapes only
+    * the result; the sketch-bytes surface leaves it at its default.
+    * Stored capacities may differ; a merge compresses to THIS
+    * capacity (intervals stay valid under compression). */
+  final case class GkCodec(capacity: Int, p: Double = 0.5) extends SketchCodec[Summary] {
     // validate at CONSTRUCTION (driver-side): a bad arg would otherwise
     // fail on the executors after the whole scan ran; the capacity cap
     // mirrors quantiles()' task-boundedness guard
-    require(capacity >= 16 && capacity <= (1 << 16),
-      s"capacity in [16, 65536], got $capacity")
-    final def zero: Summary = new Summary(capacity)
-    final def reduce(b: Summary, a: Option[Double]): Summary =
-      a.filterNot(_.isNaN).map(b.insert(_)).getOrElse(b)
-    final def merge(b1: Summary, b2: Summary): Summary = b1.merge(b2)
-    final def bufferEncoder: org.apache.spark.sql.Encoder[Summary] =
-      org.apache.spark.sql.Encoders.kryo[Summary]
-  }
-
-  final class Agg(p: Double, capacity: Int) extends SummaryAggBase[GroupQuantile](capacity) {
+    require(capacity >= 16 && capacity <= (1 << 16), s"capacity in [16, 65536], got $capacity")
     require(p >= 0.0 && p <= 1.0, s"quantile p in [0,1], got $p")
-    def finish(r: Summary): GroupQuantile = {
-      r.flush()
-      if (r.n == 0L) GroupQuantile(Double.NaN, 0L, 0L, r.isExact)
-      else {
-        val t = r.query(p)
-        GroupQuantile(t.v, t.rmin, t.rmax, r.isExact)
-      }
+    def name: String = "gk"
+    def rawType: DataType = DoubleType
+    def resultType: DataType = StructType(Seq(
+      StructField("value", DoubleType, nullable = false),
+      StructField("rank_lo", LongType, nullable = false),
+      StructField("rank_hi", LongType, nullable = false),
+      StructField("exact", BooleanType, nullable = false)))
+    def zero(): Summary = new Summary(capacity)
+    def add(b: Summary, v: Any): Summary = {
+      val d = v.asInstanceOf[Double]
+      if (d.isNaN) b else b.insert(d)
     }
-    def outputEncoder: org.apache.spark.sql.Encoder[GroupQuantile] =
-      org.apache.spark.sql.Encoders.product[GroupQuantile]
+    def merge(b: Summary, o: Summary): Summary = b.merge(o)
+    def result(b: Summary): Any =
+      if (b.n == 0L) InternalRow(Double.NaN, 0L, 0L, b.isExact)
+      else { val t = b.query(p); InternalRow(t.v, t.rmin, t.rmax, b.isExact) }
+    def serialize(b: Summary): Array[Byte] = QuantileSketch.serialize(b)
+    def deserialize(bytes: Array[Byte]): Summary = QuantileSketch.deserialize(bytes)
   }
 
   /** Column surface: `groupQuantile(valueCol, p)` usable in any
     * groupBy — yields a struct (value, rank_lo, rank_hi, exact). */
   def groupQuantile(value: Column, p: Double, capacity: Int = 1024): Column =
-    udaf(new Agg(p, capacity),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Option[Double]]())
-      .apply(value.cast(DoubleType))
+    SketchAggregate.column(value.cast(DoubleType), GkCodec(capacity, p))
 
   // ---------------------------------------------------------------
   // Persistable sketch columns — same incremental-accounting surface
@@ -331,44 +329,15 @@ object QuantileSketch {
       throw new IllegalArgumentException(s"corrupt quantile sketch: truncated bytes (${e.getMessage})")
   }
 
-  /** Aggregator: raw values → serialized summary bytes (shares the
-    * [[SummaryAggBase]] core). */
-  final class SketchBytesAgg(capacity: Int) extends SummaryAggBase[Array[Byte]](capacity) {
-    def finish(r: Summary): Array[Byte] = serialize(r)
-    def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
-  }
-
-  /** Aggregator: stored summary bytes → merged summary bytes.  Stored
-    * capacities may differ; the result compresses to THIS instance's
-    * capacity (intervals stay valid under compression). */
-  final class MergeBytesAgg(capacity: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[Array[Byte], Summary, Array[Byte]] {
-    require(capacity >= 16 && capacity <= (1 << 16), s"capacity in [16, 65536], got $capacity")
-    def zero: Summary = new Summary(capacity)
-    def reduce(b: Summary, a: Array[Byte]): Summary =
-      if (a == null) b else b.merge(deserialize(a))
-    def merge(b1: Summary, b2: Summary): Summary = b1.merge(b2)
-    def finish(r: Summary): Array[Byte] = serialize(r)
-    def bufferEncoder: org.apache.spark.sql.Encoder[Summary] =
-      org.apache.spark.sql.Encoders.kryo[Summary]
-    def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
-  }
-
   /** `gkSketch(valueCol)` in any groupBy — a BinaryType column holding
     * the group's rank summary, ready to persist. */
   def gkSketch(value: Column, capacity: Int = 1024): Column =
-    udaf(new SketchBytesAgg(capacity),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Option[Double]]())
-      .apply(value.cast(DoubleType))
+    SketchAggregate.column(value.cast(DoubleType), GkCodec(capacity), emitBytes = true)
 
   /** `gkMerge(sketchCol)` in any groupBy — merges STORED summaries
-    * without touching raw values. */
+    * without touching raw values; null rows are skipped. */
   def gkMerge(sketch: Column, capacity: Int = 1024): Column =
-    udaf(new MergeBytesAgg(capacity),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Byte]]())
-      .apply(sketch)
+    SketchAggregate.column(sketch, GkCodec(capacity), stored = true, emitBytes = true)
 
   /** Scalar: sketch bytes + probability → struct (value, rank_lo,
     * rank_hi, exact); null for a null or empty sketch. */

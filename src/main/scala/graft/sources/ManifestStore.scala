@@ -427,6 +427,51 @@ object ManifestStore {
     committed
   }
 
+  /** Independent appends into one root: STAGE every `(label, df)` batch
+    * concurrently ([[stageAppend]], one thread each — the next ingest's
+    * tasks back-fill cores the current one's stragglers free), then
+    * PUBLISH them serially in the given order ([[commitStaged]]).
+    * Wall ≈ the slowest stage, not the sum; same write jobs and same
+    * committed rows as sequential [[commitAppend]]s.  Returns the
+    * committed versions, in batch order.
+    *
+    * If any stage fails, nothing is published: the other stages' Spark
+    * jobs are cancelled (they carry a job tag unique to this call, and
+    * cancelling interrupts their tasks) and their threads awaited, so
+    * no staged write outlives the failure — a caller may stop the
+    * session next — and the failing stage's own exception is rethrown,
+    * not an `ExecutionException` wrapper.  Stages that did finish are
+    * left staged; [[vacuum]] reclaims them. */
+  def appendConcurrently(spark: SparkSession, root: String,
+                         batches: Seq[(String, DataFrame)]): Seq[Long] = {
+    import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+    val sc = spark.sparkContext
+    val tag = s"graft-stage-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(math.max(1, batches.size))
+    try {
+      val done = new ExecutorCompletionService[Staged](pool)
+      val stages = batches.map { case (label, df) =>
+        done.submit(new Callable[Staged] {
+          def call(): Staged = {
+            sc.addJobTag(tag)
+            sc.setInterruptOnCancel(true)
+            try stageAppend(spark, root, df, label) finally sc.removeJobTag(tag)
+          }
+        })
+      }
+      // completion order: the first failure surfaces while its
+      // siblings are still running, not after the slowest one ends
+      try stages.foreach(_ => done.take().get())
+      catch {
+        case e: ExecutionException =>
+          pool.shutdown()
+          while (!pool.awaitTermination(50, TimeUnit.MILLISECONDS)) sc.cancelJobsWithTag(tag)
+          throw e.getCause
+      }
+      stages.map(s => commitStaged(spark, root, s.get()))
+    } finally pool.shutdown()
+  }
+
   /** Replace the ENTIRE table as a new version: the manifest lists
     * only the new data files; previous files stay readable for pinned
     * versions until [[vacuum]].  This is the EXPLICIT-rewrite
@@ -466,11 +511,13 @@ object ManifestStore {
     val bytes = cur.map(p => f.getFileStatus(new Path(p)).getLen).sum
     val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     val dataDir = versionedDataDir(root, next, "compact")
-    val rewritten = spark.read.parquet(cur: _*)
+    // the manifest's recorded schema, as in read(): no footer-inference
+    // job; schema-less legacy manifests fall back to inference
+    val stored = schemaOf(spark, root, Some(prev))
+    val rewritten = stored.fold(spark.read)(spark.read.schema(_)).parquet(cur: _*)
     rewritten.coalesce(n)
       .write.mode("errorifexists").parquet(dataDir.toString)
-    try publish(spark, root, next,
-      schemaOf(spark, root, Some(prev)).getOrElse(rewritten.schema),
+    try publish(spark, root, next, stored.getOrElse(rewritten.schema),
       listParquet(spark, dataDir))
     catch {
       case e: java.util.ConcurrentModificationException =>

@@ -12,9 +12,11 @@ import java.nio.charset.StandardCharsets
   * e.g.   runMain graft.tools.PlanDump plans/r21 before q79 q88
   * No args after suffix = every query.  Session config mirrors
   * graft.Bench (same shuffle partitions, AQE) so the captured plan is
-  * the one the bench runs.  NOTE: building a side-effecting slot's
-  * DataFrame (streaming sinks, manifest commits) performs its setup
-  * work; the dumped plan is the returned frame's.
+  * the one the bench runs.  Building a side-effecting slot's DataFrame
+  * (sketch-table writes, streaming micro-batches, manifest commits)
+  * runs SQL executions of its own; their physical plans, as Spark
+  * describes them at execution start, follow the returned frame's plan
+  * under `== construction execution <i> ==` headers.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -35,13 +37,25 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val construction = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          construction.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    })
     val sel = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => parts.isEmpty || parts.exists(n.contains) }
     sel.foreach { case (name, fn) =>
       try {
+        construction.clear()
         val df = fn(spark, sfDir)
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+        val built = (0 until construction.size).map(i =>
+          s"\n== construction execution ${i + 1} ==\n${construction.get(i)}")
         val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+          org.apache.spark.sql.execution.FormattedMode) + built.mkString
         Files.write(outDir.resolve(s"${name}_$suffix.txt"),
           txt.getBytes(StandardCharsets.UTF_8))
         println(s"PLAN $name -> ${outDir.resolve(s"${name}_$suffix.txt")}")

@@ -16,6 +16,15 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Block until every event posted so far reached the session's
+    * listeners (`listenerBus` is private[spark]). */
+  def drainListenerBus(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The executed plan of a finished SQL execution — batch actions,
+    * writes and streaming micro-batches alike (`qe` is private[sql]). */
+  def executedPlanOf(e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : Option[org.apache.spark.sql.execution.SparkPlan] = Option(e.qe).map(_.executedPlan)
+
   def logicalPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].logicalPlan
 

@@ -50,4 +50,22 @@ class BenchTailBudgetSpec extends AnyFunSuite {
     assert(compact.contains("\"q3\":-1"), "failed rows stay visible in the seconds map")
     assert(total.contains("\"value\":2.5"), s"total must sum only successes: $total")
   }
+
+  test("oversized slot maps step precision down 3 -> 2 -> 1 -> 0 decimals, then fail loudly") {
+    def rows(n: Int) = (1 to n).map(i => (s"q${i}_x", 12.3456, 1))
+    def decimals(compact: String): Int =
+      "\"q1\":([0-9.]+)".r.findFirstMatchIn(compact).get.group(1).dropWhile(_ != '.').drop(1).length
+    val overhead = 8 * 2 + 90
+    val lines = Iterator.range(100, 400)
+      .map(n => scala.util.Try(Bench.tailLines(rows(n), 0, "sf0.1")))
+      .takeWhile(_.isSuccess).map(_.get).toSeq
+    lines.foreach { case Seq(_, compact, total) =>
+      assert(compact.length + total.length + overhead <= 2048, "every emitted map fits whole")
+    }
+    assert(lines.map(l => decimals(l(1))).distinct == Seq(3, 2, 1, 0))
+    assert(lines.last(1).contains("\"q1\":12,"), "0 decimals prints whole seconds")
+    val e = intercept[IllegalStateException](
+      Bench.tailLines(rows(100 + lines.size), 0, "sf0.1"))
+    assert(e.getMessage.contains("overflows"))
+  }
 }

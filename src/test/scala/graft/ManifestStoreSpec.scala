@@ -71,6 +71,44 @@ class ManifestStoreSpec extends SparkSpec {
     }
   }
 
+  test("appendConcurrently publishes every staged batch, in batch order") {
+    withRoot { root =>
+      val vs = ManifestStore.appendConcurrently(spark, root,
+        (0 until 3).map(b => s"batch$b" -> Seq(b * 10L, b * 10L + 1L).toDF("x")))
+      assert(vs == Seq(0L, 1L, 2L))
+      (0 until 3).foreach { b =>
+        assert(ManifestStore.read(spark, root, Some(b.toLong)).as[Long].collect().max == b * 10L + 1L)
+      }
+    }
+  }
+
+  test("appendConcurrently: a failing stage surfaces its own exception; siblings are cancelled") {
+    withRoot { root =>
+      // ~8 s of work on two of the four cores unless cancelled; the
+      // free cores keep the failing stage from queueing behind it
+      val slow = spark.range(0, 32, 1, 2).map { x =>
+        ManifestStoreSpec.slowStarted.countDown(); Thread.sleep(500); x
+      }.toDF("x")
+      // fails only once the sibling's job is running
+      val failing = spark.range(0, 1, 1, 1).map { x =>
+        ManifestStoreSpec.slowStarted.await()
+        if (x >= 0) throw new IllegalStateException("stage boom")
+        x
+      }.toDF("x")
+      val t0 = System.nanoTime()
+      val e = intercept[Exception](
+        ManifestStore.appendConcurrently(spark, root, Seq("slow" -> slow, "failing" -> failing)))
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], s"wrapped: $e")
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => Option(c.getMessage).exists(_.contains("stage boom"))), s"$e")
+      assert(secs < 6.0, s"the slow sibling ran to completion ($secs s) instead of being cancelled")
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty, "a staged job outlived the call")
+      assert(ManifestStore.currentVersion(spark, root).isEmpty, "nothing may be published")
+    }
+  }
+
   test("commitStaged survives an optimistic-concurrency loss without rewriting data (r22)") {
     withRoot { root =>
       val st = ManifestStore.stageAppend(spark, root, Seq(7L).toDF("x"), "late")
@@ -776,4 +814,9 @@ class ManifestStoreSpec extends SparkSpec {
         (0L to n.toLong))
     }
   }
+}
+
+object ManifestStoreSpec {
+  /** Opened by the first task of the slow stage in the cancellation spec. */
+  val slowStarted = new java.util.concurrent.CountDownLatch(1)
 }
