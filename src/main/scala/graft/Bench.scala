@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -36,68 +36,32 @@ import java.util.concurrent.atomic.AtomicInteger
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.local()
     // job/stage tally: every cross-round perf dispute so far reduced to
     // "how many sequential jobs did this query run" (sequential job
     // count is what a loaded driver machine amplifies) — record it per
     // query so a verdict can separate contention from regression.
-    // Counters are read after a listener-bus drain (waitForEmptyQueue
-    // below) so late-arriving events land before the snapshot.
+    // Counters are read after a listener-bus drain so late-arriving
+    // events land before the snapshot.
     val jobCount = new AtomicInteger(0)
     val stageCount = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet()
-        if (sys.env.contains("SPARK_GRAFT_JOBDEBUG")) {
-          // properties can be null on events from internal jobs — an NPE
-          // here would be swallowed by the listener bus but logged per job
-          val site = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
-          println(s"JOB ${e.jobId}: $site stages=${e.stageInfos.map(_.name).mkString(" | ")}")
-        }
-        ()
-      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobCount.incrementAndGet(); () }
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = { stageCount.incrementAndGet(); () }
     })
-    // the listener bus is async: poll until both counters hold still so
-    // a snapshot never misses events still in flight (bounded wait)
-    def drainListeners(): Unit = {
-      var last = (-1, -1)
-      var spins = 0
-      while (spins < 50 && last != ((jobCount.get, stageCount.get))) {
-        last = (jobCount.get, stageCount.get)
-        Thread.sleep(20)
-        spins += 1
-      }
-    }
-    spark.range(1000).selectExpr("sum(id)").collect() // warm up session
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => args.isEmpty || args.exists(name.contains) }
+    val selected = GraftSession.slots(args.toSeq)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // drop everything the previous query left in the block manager:
-    // Dataset caches AND directly-persisted RDDs (operators checkpoint
-    // / persist internally; anything still registered is leaked state
-    // that would pressure the next query's execution memory)
-    def cleanBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+    // exact drain; a bus still busy after Spark's 10 s wait costs
+    // the counters' precision, never the slot or the run
+    def drain(): Unit =
+      try GraftBridge.drainListenerBus(spark)
+      catch { case _: java.util.concurrent.TimeoutException => () }
     // (sec, jobs, stages) for one execution; job/stage deltas bracket
     // the run with a listener-bus drain on each side
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Int, Int) = {
-      cleanBlocks()
-      drainListeners()
+      GraftSession.cleanBlocks(spark)
+      drain()
       val (j0, s0) = (jobCount.get, stageCount.get)
       val t0 = System.nanoTime()
       // noop-sink write: materializes every output column (a bare count()
@@ -105,7 +69,7 @@ object Bench {
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
-        drainListeners()
+        drain()
         (sec, jobCount.get - j0, stageCount.get - s0)
       } catch {
         case e: Throwable =>

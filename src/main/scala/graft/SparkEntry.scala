@@ -114,35 +114,10 @@ object SparkEntry {
     iso
   }
 
-  /** events.parquet schema memo, same (path, mtime, len) keying as
-    * EzFrame.readParquet's (r22): the isolated session re-inferred the
-    * schema per QUERY across the ~10 events slots.  Keyed on the file
-    * stat so a regenerated corpus re-infers; the nanosAsLong flag is
-    * constant (eventsSession always sets it), so one memo suffices. */
-  private val eventsSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), StructType]()
-
-  private[graft] def eventsRaw(s: SparkSession, dir: String): DataFrame = {
-    val iso = eventsSession(s)
-    val path = s"$dir/events.parquet"
-    val stat = try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(p)
-      Some((fs.makeQualified(p).toString, st.getModificationTime, st.getLen))
-    } catch { case scala.util.control.NonFatal(_) => None }
-    stat match {
-      case Some(key) =>
-        val cached = eventsSchemaMemo.get(key)
-        if (cached != null) iso.read.schema(cached).parquet(path)
-        else {
-          val fresh = iso.read.parquet(path)
-          eventsSchemaMemo.put(key, fresh.schema)
-          fresh
-        }
-      case None => iso.read.parquet(path)
-    }
-  }
+  /** Raw events scan through EzFrame's parquet schema memo (its key
+    * carries the isolated session's nanosAsLong flag). */
+  private[graft] def eventsRaw(s: SparkSession, dir: String): DataFrame =
+    EzFrame.readParquet(eventsSession(s), s"$dir/events.parquet").df
 
   private[graft] def events(s: SparkSession, dir: String): DataFrame =
     normalizeEventsTs(eventsRaw(s, dir))

@@ -530,12 +530,24 @@ object EzFrame {
     * handful of corpus tables repays that per QUERY; at production
     * scale a catalog would hold the schema.  METADATA cache only (the
     * StructType, never rows); keyed on (qualified path, mtime, byte
-    * length) so a rewritten file re-infers.  StructField metadata
+    * length) so a rewritten file re-infers, plus the reading session's
+    * values of the confs that change what inference returns (a session
+    * with inferTimestampNTZ off reads timestamp[us] as TIMESTAMP, not
+    * TIMESTAMP_NTZ).  A directory's mtime changes only when an entry
+    * directly inside it is added, removed or renamed: a file rewritten
+    * in place, or any change under a nested partition directory, keeps
+    * the key and is served the stale schema.  StructField metadata
     * (units, ez_header, …) rides inside the memoized StructType
     * unchanged, and the user-specified-schema read path preserves
     * it. */
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), org.apache.spark.sql.types.StructType]()
+    (String, Long, Long, Seq[Option[String]]), org.apache.spark.sql.types.StructType]()
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
 
   /** Read Parquet, recovering units/descriptions from StructField
     * metadata and header/aliases from their stashed blocks
@@ -549,7 +561,8 @@ object EzFrame {
         // the exact cost this memo exists to avoid paying per query)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val s = fs.getFileStatus(p)
-        Some((fs.makeQualified(p).toString, s.getModificationTime, s.getLen))
+        Some((fs.makeQualified(p).toString, s.getModificationTime, s.getLen,
+          inferenceConfs.map(spark.conf.getOption)))
       } catch { case scala.util.control.NonFatal(_) => None }
       stat match {
         case Some(key) =>

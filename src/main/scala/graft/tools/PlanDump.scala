@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
@@ -10,13 +10,13 @@ import java.nio.charset.StandardCharsets
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [namePart...]
   * e.g.   runMain graft.tools.PlanDump plans/r21 before q79 q88
-  * No args after suffix = every query.  Session config mirrors
-  * graft.Bench (same shuffle partitions, AQE) so the captured plan is
-  * the one the bench runs.  Building a side-effecting slot's DataFrame
-  * (sketch-table writes, streaming micro-batches, manifest commits)
-  * runs SQL executions of its own; their physical plans, as Spark
-  * describes them at execution start, follow the returned frame's plan
-  * under `== construction execution <i> ==` headers.
+  * No args after suffix = every query.  The session is graft.Bench's
+  * (GraftSession) so the captured plan is the one the bench runs.
+  * Building a side-effecting slot's DataFrame (sketch-table writes,
+  * streaming micro-batches, manifest commits) runs SQL executions of
+  * its own; their physical plans, as Spark describes them at execution
+  * start, follow the returned frame's plan under
+  * `== construction execution <i> ==` headers.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -25,18 +25,11 @@ object PlanDump {
     val suffix = args(1)
     val parts = args.drop(2)
     Files.createDirectories(outDir)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = GraftSession.sfDir
+    // unwarmed: a warm-up action would shift every expression id in
+    // the dumps, so they would no longer diff cleanly against plans
+    // dumped by earlier commits
+    val spark = GraftSession.session()
     val construction = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
@@ -45,9 +38,7 @@ object PlanDump {
         case _ =>
       }
     })
-    val sel = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => parts.isEmpty || parts.exists(n.contains) }
-    sel.foreach { case (name, fn) =>
+    GraftSession.slots(parts.toSeq).foreach { case (name, fn) =>
       try {
         construction.clear()
         val df = fn(spark, sfDir)

@@ -449,7 +449,7 @@ object ScaleRehearsal {
 
   /** Wall seconds (min-of-2) + shuffle-write bytes (second run) for a
     * thunk — the two numbers a scale claim needs.  The listener bus is
-    * async, so bytes are read after the counter holds still. */
+    * async, so bytes are read after it drains. */
   private class Meter(spark: SparkSession) {
     private val bytes = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -459,9 +459,7 @@ object ScaleRehearsal {
       }
     })
     private def drained(): Long = {
-      var last = -1L; var spins = 0
-      while (spins < 50 && last != bytes.get) { last = bytes.get; Thread.sleep(20); spins += 1 }
-      bytes.get
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark); bytes.get
     }
     def apply(body: => Unit): (Double, Long) = {
       def once(): (Double, Long) = {

@@ -146,4 +146,17 @@ class EzFrameSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](bad.join(rr, on = "k"))
     assert(e.getMessage.contains("suffix"))
   }
+
+  test("parquet schema memo is keyed on the reading session's inference confs") {
+    val path = "/root/testdata/sf0.001/events.parquet"
+    val ts = org.apache.spark.sql.types.TimestampNTZType
+    assert(EzFrame.readParquet(spark, path).df.schema("ts").dataType == ts,
+      "precondition: the default session infers events.ts as TIMESTAMP_NTZ")
+    // a child session that turns NTZ inference off must get its own
+    // inference, not the schema the parent's read memoized
+    val child = spark.newSession()
+    child.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    val got = EzFrame.readParquet(child, path).df.schema("ts").dataType
+    assert(got == org.apache.spark.sql.types.TimestampType, s"child read ts as $got")
+  }
 }
